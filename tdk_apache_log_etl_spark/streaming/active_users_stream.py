@@ -11,31 +11,24 @@ own (user, day) pairs into that table via ``foreachBatch``; the window
 counts are answered at read time by the E175 delta pipeline over the
 maintained table — O(user-days) work, never a fact rescan.
 
-Replay safety is again BY ALGEBRA: set union is idempotent, so an
-at-least-once replay of a micro-batch is a table no-op — the third
-member of the idempotent-maintenance family (HLL register-max in
-sketch_rollup.py, bit-OR in bloom_stream.py, set-union here), all with
-zero batch-id bookkeeping. Out-of-order and late events need no
+Replay safety is BY ALGEBRA: set union is idempotent, so an
+at-least-once replay of a micro-batch is a table no-op and the table is
+swap-merged (streaming/state_swap.py). Out-of-order and late events need no
 watermark: a late (user, day) pair lands in the same set it would have
 landed in on time, and the read-side recompute repairs every affected
 window — exactness without eviction is exactly what the deduped-state
 design buys (a watermark would only be needed to BOUND the table; at
 day grain it grows with calendar × active users, not volume).
-
-Swap-write crash protocol shared with sketch_rollup/bloom_stream.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.logmetrics import sliding_active_counts
-
-from .state_swap import recover_state, swap_write
+from .state_swap import foreach_batch_stream, merge_swap
 
 
 def merge_batch_user_days(
@@ -46,7 +39,6 @@ def merge_batch_user_days(
 ) -> None:
     """One micro-batch → its distinct (user_id, d) pairs → set-union
     into the persisted activity table."""
-    spark = batch_df.sparkSession
     fresh = (
         batch_df.where(F.col(user_col).isNotNull())
         .select(
@@ -55,14 +47,7 @@ def merge_batch_user_days(
         )
         .distinct()
     )
-    # heal a crash inside a previous swap window before reading state
-    recover_state(table_path)
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
-        merged = existing.unionByName(fresh).distinct()
-    else:
-        merged = fresh
-    swap_write(merged, table_path)
+    merge_swap(fresh, table_path, lambda both: both.distinct())
 
 
 def write_active_users_stream(
@@ -74,14 +59,12 @@ def write_active_users_stream(
 ) -> DataStreamWriter:
     """Continuously maintain the deduped (user, day) activity table from
     an event stream. Caller ``.start()``s."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_user_days(batch_df, table_path, user_col, ts_col)
-
-    return (
-        parsed.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        parsed,
+        lambda batch_df, batch_id: merge_batch_user_days(
+            batch_df, table_path, user_col, ts_col
+        ),
+        checkpoint_path,
     )
 
 

@@ -14,9 +14,7 @@ uses), merges them into persisted state by summation, and
 are the same code.
 
 Exactly-once: additive merges are NOT replay-idempotent, so state lives
-under the E77 batch-id protocol — per-batch directories, a write counts
-only with its _SUCCESS marker, committed batch ids replay as no-ops
-(streaming/view_maintenance.py documents the protocol).
+under the batch-dir protocol (streaming/state_swap.py).
 
 Scale: per-batch cost is one aggregate over the batch plus a merge of
 two |types|x|hours| frames — state grows with calendar time, not event
@@ -24,8 +22,6 @@ volume.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,35 +31,17 @@ from ..operators.logmetrics import (
     ewma_anomalies_from_hourly,
     hourly_type_counts,
 )
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("hour", T.TimestampNTZType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("batch=") and os.path.exists(
-            os.path.join(state_dir, name, "hourly", "_SUCCESS")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.schema(_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, f"batch={committed[-1]}", "hourly")
+_STATE = {
+    "hourly": T.StructType(
+        [
+            T.StructField("event_type", T.StringType()),
+            T.StructField("hour", T.TimestampNTZType()),
+            T.StructField("n_events", T.LongType()),
+        ]
     )
+}
 
 
 def apply_anomaly_batch(
@@ -71,18 +49,16 @@ def apply_anomaly_batch(
 ) -> None:
     """Fold one micro-batch's (type, hour) partials into the state —
     the foreachBatch body, exposed for direct replay testing."""
-    if batch_id in set(_committed_batches(state_dir)):
-        return  # additive merge → replay must be a no-op by protocol
-    partial = hourly_type_counts(batch_df)
-    merged = (
-        _load_state(spark, state_dir)
-        .unionByName(partial)
-        .groupBy("event_type", "hour")
-        .agg(F.sum("n_events").alias("n_events"))
-    )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}", "hourly")
-    )
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        return {
+            "hourly": state["hourly"]
+            .unionByName(hourly_type_counts(batch_df))
+            .groupBy("event_type", "hour")
+            .agg(F.sum("n_events").alias("n_events"))
+        }
+
+    apply_batch(spark, state_dir, batch_id, _STATE, step)
 
 
 def maintain_anomaly_stream(
@@ -93,18 +69,18 @@ def maintain_anomaly_stream(
 ):
     """Wire the hourly merge into a writeStream; ``.start()`` to run.
     Required stream columns: ts, event_type."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_anomaly_batch(spark, state_dir, batch_df, batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        events_stream,
+        lambda batch_df, batch_id: apply_anomaly_batch(
+            spark, state_dir, batch_df, batch_id
+        ),
+        checkpoint_dir,
     )
 
 
 def read_current_anomalies(spark: SparkSession, state_dir: str) -> DataFrame:
     """EWMA baselines + spike flags over the maintained hourly table —
     the IDENTICAL walk as the batch hourly_count_anomaly_ewma query."""
-    return ewma_anomalies_from_hourly(_load_state(spark, state_dir))
+    return ewma_anomalies_from_hourly(
+        read_batch_state(spark, state_dir, _STATE)["hourly"]
+    )

@@ -11,21 +11,13 @@ into the persisted table via ``foreachBatch``.
 
 Why this is replay-safe without batch-id bookkeeping: OR is idempotent
 (setting an already-set bit is a no-op), so an at-least-once replay of a
-micro-batch leaves the table EXACTLY as a single delivery would — the
-same idempotent-by-algebra argument as the HLL rollup
-(streaming/sketch_rollup.py), and the same contrast with jdbc_stream.py
-where additive counts need the delete-then-insert protocol. Bloom
-deletions don't exist (that would need a counting filter); a shrinking
-blocklist is a periodic rebuild, which is the batch operator.
-
-The swap-write protocol (tmp → rename) is shared with sketch_rollup:
-a crash mid-rewrite leaves the old table intact and the checkpoint
-replay converges.
+micro-batch leaves the table EXACTLY as a single delivery would; the
+table is swap-merged (streaming/state_swap.py). Bloom deletions don't
+exist (that would need a counting filter); a shrinking blocklist is a
+periodic rebuild, which is the batch operator.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +28,7 @@ from ..operators.sketches import (
     bloom_hit_sql,
     bloom_word_table,
 )
-from .state_swap import recover_state, swap_write
+from .state_swap import foreach_batch_stream, merge_swap
 
 
 def merge_batch_bloom(
@@ -47,25 +39,19 @@ def merge_batch_bloom(
     key; xxhash64 is TYPE-sensitive, so build and probe must use the
     same expression (both default to a BIGINT cast here and in
     ``probe_bloom_table``)."""
-    spark = batch_df.sparkSession
     fresh = bloom_word_table(
         batch_df.select(F.expr(key_expr).alias("k")).where(
             F.col("k").isNotNull()
         ),
         "k",
     )
-    # heal a crash inside a previous swap window before reading state
-    recover_state(table_path)
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
-        merged = (
-            existing.unionByName(fresh)
-            .groupBy("widx")
-            .agg(F.expr("bit_or(word)").alias("word"))
-        )
-    else:
-        merged = fresh
-    swap_write(merged, table_path)
+    merge_swap(
+        fresh,
+        table_path,
+        lambda both: both.groupBy("widx").agg(
+            F.expr("bit_or(word)").alias("word")
+        ),
+    )
 
 
 def write_bloom_stream(
@@ -76,14 +62,12 @@ def write_bloom_stream(
 ) -> DataStreamWriter:
     """Continuously maintain the blocklist Bloom word table from a
     stream of blocked keys. Caller ``.start()``s."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_bloom(batch_df, table_path, key_expr)
-
-    return (
-        keys.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        keys,
+        lambda batch_df, batch_id: merge_batch_bloom(
+            batch_df, table_path, key_expr
+        ),
+        checkpoint_path,
     )
 
 

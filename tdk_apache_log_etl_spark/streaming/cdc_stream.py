@@ -5,9 +5,8 @@ micro-batches (op = 'upsert' | 'delete') land — the streaming form of a
 Debezium/DMS-style replication consumer, where the reference's answer is
 "reload the table nightly".
 
-Two CDC-specific correctness points on top of the E77 state protocol
-(per-batch state directories, double-commit via _SUCCESS, batch-id
-idempotence — streaming/view_maintenance.py documents the protocol):
+Two CDC-specific correctness points on top of the batch-dir state
+protocol (streaming/state_swap.py):
 
   * IN-BATCH COMPACTION: one micro-batch may carry several changes for
     the same key (insert then delete, update then update). They must
@@ -39,45 +38,25 @@ only touched keys would rewrite, same dataflow.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.cdc import apply_cdc
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
 #: Maintained snapshot shape (customer-like dimension).
 KEY = "c_custkey"
 PAYLOAD = ["c_name", "c_mktsegment"]
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("c_custkey", T.LongType()),
-        T.StructField("c_name", T.StringType()),
-        T.StructField("c_mktsegment", T.StringType()),
-    ]
-)
-
-
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("batch=") and os.path.exists(
-            os.path.join(state_dir, name, "snapshot", "_SUCCESS")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.schema(_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, f"batch={committed[-1]}", "snapshot")
+_STATE = {
+    "snapshot": T.StructType(
+        [
+            T.StructField("c_custkey", T.LongType()),
+            T.StructField("c_name", T.StringType()),
+            T.StructField("c_mktsegment", T.StringType()),
+        ]
     )
+}
 
 
 def compact_batch(batch_df: DataFrame) -> DataFrame:
@@ -99,14 +78,16 @@ def apply_cdc_stream_batch(
     spark: SparkSession, state_dir: str, batch_df: DataFrame, batch_id: int
 ) -> None:
     """The foreachBatch body, exposed for direct replay testing."""
-    if batch_id in set(_committed_batches(state_dir)):
-        return  # exactly-once: replayed batch is a no-op
-    base = _load_state(spark, state_dir)
-    changes = compact_batch(batch_df)
-    new_state = apply_cdc(base, changes, KEY, PAYLOAD).drop("op")
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}", "snapshot")
-    )
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        changes = compact_batch(batch_df)
+        return {
+            "snapshot": apply_cdc(
+                state["snapshot"], changes, KEY, PAYLOAD
+            ).drop("op")
+        }
+
+    apply_batch(spark, state_dir, batch_id, _STATE, step)
 
 
 def maintain_dimension_stream(
@@ -118,17 +99,15 @@ def maintain_dimension_stream(
     """Wire the CDC apply into a writeStream; ``.start()`` to run.
     Required stream columns: c_custkey, op, change_seq, and the payload
     columns (full after-images — see the module compaction contract)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_stream_batch(spark, state_dir, batch_df, batch_id)
-
-    return (
-        changes_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        changes_stream,
+        lambda batch_df, batch_id: apply_cdc_stream_batch(
+            spark, state_dir, batch_df, batch_id
+        ),
+        checkpoint_dir,
     )
 
 
 def read_current_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained dimension as of the last committed batch."""
-    return _load_state(spark, state_dir)
+    return read_batch_state(spark, state_dir, _STATE)["snapshot"]

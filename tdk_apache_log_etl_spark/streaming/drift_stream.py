@@ -8,13 +8,9 @@ counts to the live table, and the read side scores the live distribution
 against the baseline with the same quarter-bit-lattice PSI — so the
 monitor never rescans history AND never evaluates a libm log.
 
-Counts are ADDITIVE, not idempotent, so replay safety uses the batch-id
-exactly-once protocol shared with mv_stream.py / view_maintenance.py:
-per-batch swap directories committed by their _SUCCESS marker;
-already-committed ids are skipped on redelivery.  Each committed dir
-holds the FULL merged count table, so retention prunes everything older
-than the commit's predecessor — without it state grows
-O(batches x state size) on a long-running stream.
+Counts are ADDITIVE, not idempotent, so the live table lives under the
+batch-dir protocol (streaming/state_swap.py): replays are no-ops and
+only the latest commit and its predecessor are kept.
 
 Scale: each batch collapses map-side to its ≤(|types| + ~10 magnitude
 buckets) cell frame before touching the state; the PSI read joins two
@@ -23,15 +19,13 @@ cell frames of that same bounded size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.concentration import _PSI_FEATURES_SPARK, psi_from_cells
-from .state_swap import prune_batch_dirs
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
 _COUNT_SCHEMA = T.StructType(
     [
@@ -40,6 +34,7 @@ _COUNT_SCHEMA = T.StructType(
         T.StructField("cnt", T.LongType()),
     ]
 )
+_STATE = {"counts": _COUNT_SCHEMA}
 
 
 def _feature_bin_counts(df: DataFrame) -> DataFrame:
@@ -59,75 +54,35 @@ def freeze_baseline(events: DataFrame, path: str) -> None:
     _feature_bin_counts(events).write.mode("overwrite").parquet(path)
 
 
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("batch=") and os.path.exists(
-            os.path.join(state_dir, name, "counts", "_SUCCESS")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _state_path(state_dir: str, batch_id: int) -> str:
-    return os.path.join(state_dir, f"batch={batch_id}", "counts")
-
-
 def apply_drift_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    committed = _committed_batches(state_dir)
-    if batch_id in committed:
-        return
-    spark = batch_df.sparkSession
-    delta = _feature_bin_counts(batch_df)
-    if committed:
-        prev = spark.read.schema(_COUNT_SCHEMA).parquet(
-            _state_path(state_dir, committed[-1])
-        )
-        delta = (
-            prev.unionByName(delta)
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        return {
+            "counts": state["counts"]
+            .unionByName(_feature_bin_counts(batch_df))
             .groupBy("feature", "bin")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-    delta.write.mode("overwrite").parquet(_state_path(state_dir, batch_id))
-    # retention: each committed dir holds the FULL merged table, so only
-    # this commit and its predecessor (read-side race) stay live
-    prune_batch_dirs(
-        state_dir,
-        {batch_id} | ({committed[-1]} if committed else set()),
-    )
+        }
+
+    apply_batch(batch_df.sparkSession, state_dir, batch_id, _STATE, step)
 
 
 def maintain_drift_stream(
     events: DataFrame, state_dir: str, checkpoint_path: str
 ) -> DataStreamWriter:
     """Continuously maintain the live count table. Caller ``.start()``s."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_drift_batch(batch_df, state_dir, batch_id)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        events,
+        lambda batch_df, batch_id: apply_drift_batch(
+            batch_df, state_dir, batch_id
+        ),
+        checkpoint_path,
     )
 
 
 def read_live_counts(spark: SparkSession, state_dir: str) -> DataFrame:
-    # Snapshot-lifetime note: the keep-2 retention in apply_drift_batch
-    # guarantees the dir resolved here survives exactly ONE further
-    # commit.  Materialize (or re-read) promptly; a reader that sits on
-    # this lazy frame across two commits loses its snapshot (see
-    # state_swap.prune_batch_dirs).
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _COUNT_SCHEMA)
-    return spark.read.schema(_COUNT_SCHEMA).parquet(
-        _state_path(state_dir, committed[-1])
-    )
+    return read_batch_state(spark, state_dir, _STATE)["counts"]
 
 
 def read_psi_vs_baseline(

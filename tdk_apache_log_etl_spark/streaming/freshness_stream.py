@@ -6,26 +6,20 @@ The monitor that detects a stalled producer must not itself rescan the
 event history: each micro-batch contributes only its OWN per-type MAX
 timestamps, merged into the persisted watermark table by groupBy-MAX.
 
-MAX is the fourth member of this repo's idempotent-merge family (HLL
-register-max in sketch_rollup.py, bit-OR in bloom_stream.py, set-union
-in active_users_stream.py): replaying a micro-batch re-MAXes the same
-timestamps and the table is bit-identical, so at-least-once delivery
-needs zero batch-id bookkeeping. Late/out-of-order events are also
-harmless by the same algebra — an old timestamp can never LOWER a
-high-water mark.
-
-Swap-write crash protocol shared with the other three modules.
+MAX is idempotent: replaying a micro-batch re-MAXes the same
+timestamps and the table is bit-identical, so it is swap-merged
+(streaming/state_swap.py). Late/out-of-order events are also harmless
+by the same algebra — an old timestamp can never LOWER a high-water
+mark.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from .state_swap import recover_state, swap_write
+from .state_swap import foreach_batch_stream, merge_swap
 
 
 def merge_batch_watermarks(
@@ -36,32 +30,24 @@ def merge_batch_watermarks(
 ) -> None:
     """One micro-batch → per-type MAX timestamps → MAX-merge into the
     persisted watermark table."""
-    spark = batch_df.sparkSession
     fresh = batch_df.groupBy(
         F.col(type_col).alias("event_type")
     ).agg(
         F.max(F.col(ts_col)).alias("last_ts"),
         F.count(F.lit(1)).cast("long").alias("n_events"),
     )
-    # heal a crash inside a previous swap window before reading state
-    recover_state(table_path)
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
-        merged = (
-            existing.unionByName(fresh)
-            .groupBy("event_type")
-            .agg(
-                F.max("last_ts").alias("last_ts"),
-                # counts are additive, NOT idempotent — they are advisory
-                # here (replay may overcount); the CONTRACT column is the
-                # max-merged watermark. Exactly-once counts belong to the
-                # jdbc_stream batch-id protocol.
-                F.sum("n_events").cast("long").alias("n_events"),
-            )
-        )
-    else:
-        merged = fresh
-    swap_write(merged, table_path)
+    merge_swap(
+        fresh,
+        table_path,
+        lambda both: both.groupBy("event_type").agg(
+            F.max("last_ts").alias("last_ts"),
+            # counts are additive, NOT idempotent — they are advisory
+            # here (replay may overcount); the CONTRACT column is the
+            # max-merged watermark. Exactly-once counts belong to the
+            # jdbc_stream batch-id protocol.
+            F.sum("n_events").cast("long").alias("n_events"),
+        ),
+    )
 
 
 def write_freshness_stream(
@@ -73,14 +59,12 @@ def write_freshness_stream(
 ) -> DataStreamWriter:
     """Continuously maintain the per-type watermark table. Caller
     ``.start()``s."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_watermarks(batch_df, table_path, type_col, ts_col)
-
-    return (
-        events.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        events,
+        lambda batch_df, batch_id: merge_batch_watermarks(
+            batch_df, table_path, type_col, ts_col
+        ),
+        checkpoint_path,
     )
 
 

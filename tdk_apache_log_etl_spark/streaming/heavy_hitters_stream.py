@@ -22,11 +22,10 @@ it), and every truly-heavy n-gram is in the table (no false
 negatives). Those bounds — not run-to-run bit equality, which merge
 order legitimately changes — are the contract the tests pin.
 
-Exactly-once: counter addition is NOT replay-idempotent, so state
-lives under the E77 per-batch-directory protocol (a batch commits only
-with its _SUCCESS markers; replayed ids are a no-op), same as
-slo_stream.py; contrast sketch_rollup.py where HLL union needs none of
-this by algebra.
+Exactly-once: counter addition is NOT replay-idempotent, so the
+(summary, meta) pair lives under the batch-dir protocol
+(streaming/state_swap.py), same as slo_stream.py; contrast
+sketch_rollup.py where HLL union needs none of this by algebra.
 
 Scale: per batch, one exact count of the BATCH's n-grams (bounded by
 batch vocabulary), a union with the ≤ k-row state, and a
@@ -37,26 +36,27 @@ collected.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.sketches import MG_K
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
-_SUMMARY_SCHEMA = T.StructType(
-    [
-        T.StructField("ngram", T.StringType()),
-        T.StructField("est", T.LongType()),
-    ]
-)
-_META_SCHEMA = T.StructType(
-    [
-        T.StructField("n_total", T.LongType()),
-        T.StructField("err_bound", T.LongType()),
-    ]
-)
+_STATE = {
+    "summary": T.StructType(
+        [
+            T.StructField("ngram", T.StringType()),
+            T.StructField("est", T.LongType()),
+        ]
+    ),
+    "meta": T.StructType(
+        [
+            T.StructField("n_total", T.LongType()),
+            T.StructField("err_bound", T.LongType()),
+        ]
+    ),
+}
 
 
 def batch_ngram_counts(batch_df: DataFrame) -> DataFrame:
@@ -79,35 +79,10 @@ def batch_ngram_counts(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("batch=") and all(
-            os.path.exists(os.path.join(state_dir, name, part, "_SUCCESS"))
-            for part in ("summary", "meta")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _load_state(
-    spark: SparkSession, state_dir: str
-) -> tuple[DataFrame, int, int]:
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _SUMMARY_SCHEMA), 0, 0
-    base = os.path.join(state_dir, f"batch={committed[-1]}")
-    summary = spark.read.schema(_SUMMARY_SCHEMA).parquet(
-        os.path.join(base, "summary")
-    )
-    [meta] = (
-        spark.read.schema(_META_SCHEMA)
-        .parquet(os.path.join(base, "meta"))
-        .collect()
-    )
-    return summary, meta.n_total, meta.err_bound
+def _meta_scalars(meta: DataFrame) -> tuple[int, int]:
+    """(n_total, err_bound) of a committed meta part; (0, 0) when cold."""
+    rows = meta.collect()
+    return (rows[0].n_total, rows[0].err_bound) if rows else (0, 0)
 
 
 def apply_hh_batch(
@@ -120,39 +95,41 @@ def apply_hh_batch(
     """Fold one micro-batch into the MG state — the foreachBatch body,
     exposed for direct replay/torn-write testing. ``k`` is the counter
     budget (tests shrink it to force the decrement path)."""
-    if batch_id in set(_committed_batches(state_dir)):
-        return  # additive counters → replay must be a no-op by protocol
-    state, n_total, err_bound = _load_state(spark, state_dir)
-    counts = batch_ngram_counts(batch_df)
-    batch_n = counts.agg(F.sum("est")).collect()[0][0] or 0
-    merged = (
-        state.unionByName(counts)
-        .groupBy("ngram")
-        .agg(F.sum("est").alias("est"))
-    )
-    # reduce to ≤ k entries; one TakeOrdered(k+1) per pass finds Δ. A
-    # single subtraction can land exactly ON several tied counters and
-    # still leave > k strictly-greater survivors only if > k entries
-    # exceed Δ — impossible by choice of Δ as the (k+1)-th largest —
-    # so ONE pass always suffices; the loop is belt-and-braces for the
-    # degenerate all-equal frame.
-    while True:
-        top = merged.orderBy(F.desc("est"), "ngram").limit(k + 1)
-        stats = top.agg(
-            F.count(F.lit(1)).alias("m"), F.min("est").alias("kth1")
-        ).collect()[0]
-        if stats.m <= k:
-            break
-        delta = stats.kth1
-        err_bound += delta
-        merged = merged.select(
-            "ngram", (F.col("est") - delta).alias("est")
-        ).filter(F.col("est") > 0)
-    base = os.path.join(state_dir, f"batch={batch_id}")
-    merged.write.mode("overwrite").parquet(os.path.join(base, "summary"))
-    spark.createDataFrame(
-        [(int(n_total + batch_n), int(err_bound))], _META_SCHEMA
-    ).write.mode("overwrite").parquet(os.path.join(base, "meta"))
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        n_total, err_bound = _meta_scalars(state["meta"])
+        counts = batch_ngram_counts(batch_df)
+        batch_n = counts.agg(F.sum("est")).collect()[0][0] or 0
+        merged = (
+            state["summary"]
+            .unionByName(counts)
+            .groupBy("ngram")
+            .agg(F.sum("est").alias("est"))
+        )
+        # reduce to ≤ k entries; one TakeOrdered(k+1) per pass finds Δ. A
+        # single subtraction can land exactly ON several tied counters and
+        # still leave > k strictly-greater survivors only if > k entries
+        # exceed Δ — impossible by choice of Δ as the (k+1)-th largest —
+        # so ONE pass always suffices; the loop is belt-and-braces for the
+        # degenerate all-equal frame.
+        while True:
+            top = merged.orderBy(F.desc("est"), "ngram").limit(k + 1)
+            stats = top.agg(
+                F.count(F.lit(1)).alias("m"), F.min("est").alias("kth1")
+            ).collect()[0]
+            if stats.m <= k:
+                break
+            delta = stats.kth1
+            err_bound += delta
+            merged = merged.select(
+                "ngram", (F.col("est") - delta).alias("est")
+            ).filter(F.col("est") > 0)
+        meta = spark.createDataFrame(
+            [(int(n_total + batch_n), int(err_bound))], _STATE["meta"]
+        )
+        return {"summary": merged, "meta": meta}
+
+    apply_batch(spark, state_dir, batch_id, _STATE, step)
 
 
 def maintain_heavy_hitters_stream(
@@ -164,14 +141,12 @@ def maintain_heavy_hitters_stream(
 ):
     """Wire the MG fold into a writeStream; ``.start()`` to run.
     Required stream column: text."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_hh_batch(spark, state_dir, batch_df, batch_id, k=k)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        docs_stream,
+        lambda batch_df, batch_id: apply_hh_batch(
+            spark, state_dir, batch_df, batch_id, k=k
+        ),
+        checkpoint_dir,
     )
 
 
@@ -181,8 +156,9 @@ def read_current_heavy_hitters(
     """Candidate table with the MG certainty labels: ``guaranteed``
     (est alone clears the n/(k+1) threshold — truly heavy, no rescan
     needed) and ``possible`` (only est + err_bound clears it)."""
-    summary, n_total, err_bound = _load_state(spark, state_dir)
-    return summary.select(
+    state = read_batch_state(spark, state_dir, _STATE)
+    n_total, err_bound = _meta_scalars(state["meta"])
+    return state["summary"].select(
         "ngram",
         "est",
         F.lit(n_total).alias("n_total"),

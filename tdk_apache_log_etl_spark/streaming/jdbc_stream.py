@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..sinks.jdbc import write_jdbc
+from .state_swap import foreach_batch_stream
 
 #: Derby's SQLState for "table does not exist" — the first batch races
 #: table auto-creation, so a missing table on DELETE is expected once.
@@ -98,12 +99,10 @@ def write_jdbc_summary_stream(
     ``SUM(requests_count) GROUP BY user_id`` over the batch-stamped rows
     — kept additive so the database write stays append-shaped (no
     read-modify-write races between batches)."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_user_counts_batch(batch_df, batch_id, url, table, properties)
-
-    return (
-        parsed.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        parsed,
+        lambda batch_df, batch_id: upsert_user_counts_batch(
+            batch_df, batch_id, url, table, properties
+        ),
+        checkpoint_path,
     )

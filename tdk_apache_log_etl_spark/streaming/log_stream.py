@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..sources.apache_log import parse_clf_lines
+from .state_swap import foreach_batch_stream
 
 
 def read_log_stream(
@@ -238,11 +239,7 @@ def write_summary_stream(
             .parquet(out_path)
         )
 
-    return (
-        parsed.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch_stream(parsed, _write_batch, checkpoint_path)
 
 
 def write_windowed_topk_stream(
@@ -290,12 +287,8 @@ def write_windowed_topk_stream(
             .parquet(out_path)
         )
 
-    return (
-        counts.writeStream.outputMode("append")
-        .foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )
+    # append is the default output mode
+    return foreach_batch_stream(counts, _write_batch, checkpoint_path)
 
 
 def enrich_stream_ip_ranges(parsed: DataFrame, nation: DataFrame) -> DataFrame:

@@ -6,16 +6,9 @@ rollup current as order micro-batches land, so planning/mv_rewrite.py
 can answer month/quarter/year queries from streaming state that is never
 more than one micro-batch stale — the lakehouse "continuous MV".
 
-Sums and counts are ADDITIVE, not idempotent, so replay safety comes
-from the batch-id exactly-once protocol shared with
-view_maintenance.py / cdc_stream.py / slo_stream.py:
-
-  * each batch writes the FULL merged rollup to a fresh
-    ``state_dir/batch=<id>/mv`` directory (its ``_SUCCESS`` marker is
-    the commit point) — a crash mid-write leaves only an uncommitted
-    directory behind;
-  * an already-committed batch id is skipped on redelivery, so
-    foreachBatch's at-least-once becomes exactly-once state.
+Sums and counts are ADDITIVE, not idempotent, so the rollup lives
+under the batch-dir protocol (streaming/state_swap.py): replays are
+no-ops and only the latest commit and its predecessor are kept.
 
 Scale: per batch the work is O(|delta| + |view|) — the delta collapses
 map-side to its (day x status) partial before touching the view; no
@@ -26,8 +19,6 @@ table format, same dataflow).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
@@ -35,35 +26,25 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.tablestats import daily_rev_mv_spec, monthly_rev_query
 from ..planning import MaterializedView, rollup_frame, try_rewrite
-from .state_swap import prune_batch_dirs
-
-_MV_SCHEMA = T.StructType(
-    [
-        T.StructField("month_day", T.TimestampNTZType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("rev_cents", T.LongType()),
-        T.StructField("n_orders", T.LongType()),
-        T.StructField("n_vals", T.LongType()),
-    ]
+from .state_swap import (
+    apply_batch,
+    batch_part_path,
+    committed_batches,
+    foreach_batch_stream,
+    read_batch_state,
 )
 
-
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if not name.startswith("batch="):
-            continue
-        if os.path.exists(
-            os.path.join(state_dir, name, "mv", "_SUCCESS")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _state_path(state_dir: str, batch_id: int) -> str:
-    return os.path.join(state_dir, f"batch={batch_id}", "mv")
+_STATE = {
+    "mv": T.StructType(
+        [
+            T.StructField("month_day", T.TimestampNTZType()),
+            T.StructField("status", T.StringType()),
+            T.StructField("rev_cents", T.LongType()),
+            T.StructField("n_orders", T.LongType()),
+            T.StructField("n_vals", T.LongType()),
+        ]
+    )
+}
 
 
 def apply_mv_batch(
@@ -71,65 +52,39 @@ def apply_mv_batch(
 ) -> None:
     """Merge one micro-batch of orders into the rollup state — skipped
     when this batch id is already committed (replay)."""
-    committed = _committed_batches(state_dir)
-    if batch_id in committed:
-        return
-    spark = batch_df.sparkSession
-    delta = rollup_frame(batch_df, daily_rev_mv_spec())
-    if committed:
-        prev = spark.read.schema(_MV_SCHEMA).parquet(
-            _state_path(state_dir, committed[-1])
-        )
-        merged = (
-            prev.unionByName(delta)
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        delta = rollup_frame(batch_df, daily_rev_mv_spec())
+        return {
+            "mv": state["mv"]
+            .unionByName(delta)
             .groupBy("month_day", "status")
             .agg(
                 F.sum("rev_cents").cast("long").alias("rev_cents"),
                 F.sum("n_orders").cast("long").alias("n_orders"),
                 F.sum("n_vals").cast("long").alias("n_vals"),
             )
-        )
-    else:
-        merged = delta
-    merged.write.mode("overwrite").parquet(
-        _state_path(state_dir, batch_id)
-    )
-    # retention: committed dirs are full snapshots; keep only this
-    # commit and its predecessor (read-side race), prune the rest
-    prune_batch_dirs(
-        state_dir,
-        {batch_id} | ({committed[-1]} if committed else set()),
-    )
+        }
+
+    apply_batch(batch_df.sparkSession, state_dir, batch_id, _STATE, step)
 
 
 def maintain_mv_stream(
     orders: DataFrame, state_dir: str, checkpoint_path: str
 ) -> DataStreamWriter:
     """Continuously maintain the rollup.  Caller ``.start()``s."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_mv_batch(batch_df, state_dir, batch_id)
-
-    return (
-        orders.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        orders,
+        lambda batch_df, batch_id: apply_mv_batch(
+            batch_df, state_dir, batch_id
+        ),
+        checkpoint_path,
     )
 
 
 def read_mv_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The rollup at the highest committed batch (empty on cold start).
-
-    Snapshot-lifetime note: keep-2 retention in apply_mv_batch means the
-    dir resolved here survives exactly ONE further commit — materialize
-    promptly, don't hold the lazy frame across two commits (see
-    state_swap.prune_batch_dirs)."""
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _MV_SCHEMA)
-    return spark.read.schema(_MV_SCHEMA).parquet(
-        _state_path(state_dir, committed[-1])
-    )
+    """The rollup at the highest committed batch (empty on cold start)."""
+    return read_batch_state(spark, state_dir, _STATE)["mv"]
 
 
 def monthly_from_stream(
@@ -137,13 +92,13 @@ def monthly_from_stream(
 ) -> DataFrame:
     """Answer the month-grain revenue query THROUGH the rewrite layer,
     directly off streaming state — no fact scan anywhere."""
-    committed = _committed_batches(state_dir)
+    committed = committed_batches(state_dir, _STATE)
     if not committed:
         raise ValueError(f"no committed MV state under {state_dir}")
     mv = MaterializedView(
         "daily_rev_stream",
         daily_rev_mv_spec(),
-        _state_path(state_dir, committed[-1]),
+        batch_part_path(state_dir, committed[-1], "mv"),
     )
     out = try_rewrite(spark, monthly_rev_query(), mv)
     assert out is not None  # spec subsumes by construction

@@ -9,30 +9,24 @@ history.  The trick is that every OHLC component is a mergeable min/max:
   * high/low = plain MAX/MIN of value
 
 Struct min/max is IDEMPOTENT — re-merging a replayed micro-batch
-re-minimizes the same keys and the table is bit-identical — which puts
-OHLC in this repo's idempotent-merge streaming family (HLL register-max
-in sketch_rollup.py, bit-OR in bloom_stream.py, set-union in
-active_users_stream.py, timestamp-MAX in freshness_stream.py).
-At-least-once delivery therefore needs zero batch-id bookkeeping for
-the O/H/L/C contract columns; the additive n_events count is advisory
-under replay, exactly like freshness_stream's n_events (exactly-once
-counts belong to the jdbc_stream batch-id protocol).
+re-minimizes the same keys and the table is bit-identical — so the bar
+table is swap-merged (streaming/state_swap.py) with no batch-id
+bookkeeping for the O/H/L/C contract columns; the additive n_events
+count is advisory under replay, exactly like freshness_stream's
+n_events (exactly-once counts belong to the jdbc_stream batch-id
+protocol).
 
 Late/out-of-order events are correct by the same algebra: an event older
 than the current open simply wins the struct-MIN and becomes the open.
-
-Swap-write crash protocol shared with the other four modules.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from .state_swap import recover_state, swap_write
+from .state_swap import foreach_batch_stream, merge_swap
 
 
 def _partial_bars(
@@ -61,17 +55,13 @@ def _partial_bars(
     )
 
 
-def _merge_bars(a: DataFrame, b: DataFrame) -> DataFrame:
-    return (
-        a.unionByName(b)
-        .groupBy("event_type", "hour_ts")
-        .agg(
-            F.min("ofirst").alias("ofirst"),
-            F.max("olast").alias("olast"),
-            F.max("high_value").alias("high_value"),
-            F.min("low_value").alias("low_value"),
-            F.sum("n_events").cast("long").alias("n_events"),
-        )
+def _merge_bars(bars: DataFrame) -> DataFrame:
+    return bars.groupBy("event_type", "hour_ts").agg(
+        F.min("ofirst").alias("ofirst"),
+        F.max("olast").alias("olast"),
+        F.max("high_value").alias("high_value"),
+        F.min("low_value").alias("low_value"),
+        F.sum("n_events").cast("long").alias("n_events"),
     )
 
 
@@ -84,18 +74,9 @@ def merge_batch_bars(
     value_col: str = "value",
 ) -> None:
     """One micro-batch → partial bars → min/max-merge into the persisted
-    bar-state table (crash-RECOVERABLE swap-write — see state_swap;
-    a die between the two renames is healed by recover_state at the
-    next merge entry, not lost)."""
-    spark = batch_df.sparkSession
+    bar-state table."""
     fresh = _partial_bars(batch_df, type_col, ts_col, id_col, value_col)
-    # heal a crash inside a previous swap window before reading state
-    recover_state(table_path)
-    if os.path.exists(table_path):
-        merged = _merge_bars(spark.read.parquet(table_path), fresh)
-    else:
-        merged = fresh
-    swap_write(merged, table_path)
+    merge_swap(fresh, table_path, _merge_bars)
 
 
 def write_ohlc_stream(
@@ -109,16 +90,12 @@ def write_ohlc_stream(
 ) -> DataStreamWriter:
     """Continuously maintain the per-(type, hour) bar table.  Caller
     ``.start()``s."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_bars(
+    return foreach_batch_stream(
+        events,
+        lambda batch_df, batch_id: merge_batch_bars(
             batch_df, table_path, type_col, ts_col, id_col, value_col
-        )
-
-    return (
-        events.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+        ),
+        checkpoint_path,
     )
 
 

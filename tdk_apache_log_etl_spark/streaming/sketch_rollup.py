@@ -15,7 +15,8 @@ EXACTLY as a single delivery would. Contrast jdbc_stream.py, where the
 additive counts need delete-then-insert keyed by batch id to survive
 replay. Idempotent-by-algebra beats idempotent-by-protocol when the
 aggregate allows it; tests/test_streaming_sketch.py replays a batch and
-asserts bit-identical sketches.
+asserts bit-identical sketches. The table is swap-merged
+(streaming/state_swap.py).
 
 Merge cost: the rewrite touches one sketch table of |grain| rows
 (day×type — thousands, not billions) per micro-batch. At higher grain
@@ -27,15 +28,12 @@ rewrite is the honest simple form.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.sketches import HLL_LGK
-
-from .state_swap import recover_state, swap_write
+from .state_swap import foreach_batch_stream, merge_swap
 
 
 def _merge_batch_sketches(
@@ -47,29 +45,20 @@ def _merge_batch_sketches(
 ) -> None:
     """One micro-batch → per-grain sketches → union-merge into the table.
 
-    The read-modify-write is a driver-coordinated swap (write to a tmp
-    dir, then atomic-ish rename) so a crash mid-rewrite leaves the old
-    table intact; the checkpoint replays the batch and the idempotent
-    union converges to the same table either way.
+    A crash mid-rewrite leaves the old table intact (state_swap's
+    swap-merge protocol); the checkpoint replays the batch and the
+    idempotent union converges to the same table either way.
     """
-    spark = batch_df.sparkSession
     fresh = batch_df.groupBy(*dims).agg(
         F.hll_sketch_agg(F.col(key), F.lit(lgk)).alias("hll")
     )
-    # heal a crash inside a previous swap window before reading state
-    recover_state(table_path)
-    if os.path.exists(table_path):
-        # the swap protocol guarantees table_path is absent or complete,
-        # so a plain (non-declared-schema) read can't see a half-write
-        existing = spark.read.parquet(table_path)
-        merged = (
-            existing.unionByName(fresh)
-            .groupBy(*dims)
-            .agg(F.hll_union_agg(F.col("hll"), F.lit(False)).alias("hll"))
-        )
-    else:
-        merged = fresh
-    swap_write(merged, table_path)
+    merge_swap(
+        fresh,
+        table_path,
+        lambda both: both.groupBy(*dims).agg(
+            F.hll_union_agg(F.col("hll"), F.lit(False)).alias("hll")
+        ),
+    )
 
 
 def write_sketch_rollup_stream(
@@ -83,15 +72,12 @@ def write_sketch_rollup_stream(
     sketch table from a parsed CLF stream. Caller ``.start()``s."""
     dims = dims or ["status_code", "date"]
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_batch_sketches(
+    return foreach_batch_stream(
+        parsed,
+        lambda batch_df, batch_id: _merge_batch_sketches(
             batch_df.filter(F.col(key).isNotNull()), table_path, dims, key
-        )
-
-    return (
-        parsed.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
+        ),
+        checkpoint_path,
     )
 
 

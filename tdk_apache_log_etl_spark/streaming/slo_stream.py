@@ -15,11 +15,9 @@ shared ``burn_from_hourly`` over the state. Batch and stream cannot
 drift: they are the same code.
 
 Exactly-once: additive merges are NOT replay-idempotent (a replayed
-batch would double-count), so state lives under the E77 protocol —
-per-batch directories, a write counts only with its _SUCCESS marker,
-batch ids skip when already committed (streaming/view_maintenance.py
-documents the protocol; contrast sketch_rollup.py where HLL union is
-idempotent by algebra and needs none of this).
+batch would double-count), so state lives under the batch-dir protocol
+(streaming/state_swap.py); contrast sketch_rollup.py where HLL union is
+idempotent by algebra and needs none of this.
 
 Scale: per-batch cost is one aggregate over the batch plus a merge of
 two |hours|-sized frames — hours grow with calendar time, not volume.
@@ -27,42 +25,22 @@ two |hours|-sized frames — hours grow with calendar time, not volume.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.logmetrics import burn_from_hourly, hourly_error_counts
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
-_HOURLY_SCHEMA = T.StructType(
-    [
-        T.StructField("hour", T.TimestampNTZType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_errors", T.LongType()),
-    ]
-)
-
-
-def _committed_batches(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("batch=") and os.path.exists(
-            os.path.join(state_dir, name, "hourly", "_SUCCESS")
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return spark.createDataFrame([], _HOURLY_SCHEMA)
-    return spark.read.schema(_HOURLY_SCHEMA).parquet(
-        os.path.join(state_dir, f"batch={committed[-1]}", "hourly")
+_STATE = {
+    "hourly": T.StructType(
+        [
+            T.StructField("hour", T.TimestampNTZType()),
+            T.StructField("n_events", T.LongType()),
+            T.StructField("n_errors", T.LongType()),
+        ]
     )
+}
 
 
 def apply_slo_batch(
@@ -70,21 +48,19 @@ def apply_slo_batch(
 ) -> None:
     """Fold one micro-batch's hourly partials into the state — the
     foreachBatch body, exposed for direct replay testing."""
-    if batch_id in set(_committed_batches(state_dir)):
-        return  # additive merge → replay must be a no-op by protocol
-    partial = hourly_error_counts(batch_df)
-    merged = (
-        _load_state(spark, state_dir)
-        .unionByName(partial)
-        .groupBy("hour")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("n_errors").alias("n_errors"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}", "hourly")
-    )
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        return {
+            "hourly": state["hourly"]
+            .unionByName(hourly_error_counts(batch_df))
+            .groupBy("hour")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("n_errors").alias("n_errors"),
+            )
+        }
+
+    apply_batch(spark, state_dir, batch_id, _STATE, step)
 
 
 def maintain_slo_stream(
@@ -95,18 +71,18 @@ def maintain_slo_stream(
 ):
     """Wire the hourly merge into a writeStream; ``.start()`` to run.
     Required stream columns: ts, event_type."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_slo_batch(spark, state_dir, batch_df, batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        events_stream,
+        lambda batch_df, batch_id: apply_slo_batch(
+            spark, state_dir, batch_df, batch_id
+        ),
+        checkpoint_dir,
     )
 
 
 def read_current_alerts(spark: SparkSession, state_dir: str) -> DataFrame:
     """Burn rates + alert flags over the maintained hourly table — the
     IDENTICAL computation as the batch slo_burn_rate query."""
-    return burn_from_hourly(_load_state(spark, state_dir))
+    return burn_from_hourly(
+        read_batch_state(spark, state_dir, _STATE)["hourly"]
+    )

@@ -4,92 +4,44 @@
 micro-batches land — the streaming answer to the reference's nightly
 full-table recompute (sree-etl-tdk-glue-job.py:52-68).
 
-State layout and exactly-once:
-
-  * The maintained pair (view, fact partials R) is written per batch to
-    ``state_dir/batch=<id>/{view,partials}`` — a fresh directory per
-    batch, never an in-place overwrite, so a crash mid-write can only
-    leave an INCOMPLETE batch directory behind.
-  * A batch directory counts as committed only when BOTH parquet writes
-    finished (their ``_SUCCESS`` markers exist). Readers and the merge
-    itself resolve state as the highest committed batch id.
-  * Replays are idempotent: if the committed state for this batch_id
-    already exists (crash after state write, before the checkpoint
-    commit), the batch is skipped — the at-least-once delivery of
-    foreachBatch becomes exactly-once state, the same batch-id guard the
-    JDBC upsert stream uses (streaming/jdbc_stream.py).
+The maintained pair (view, fact partials R) lives under the batch-dir
+protocol (streaming/state_swap.py) as ``batch=<id>/{view,partials}``: a
+batch commits only when both parts finished, and a replayed batch id is
+a no-op — the at-least-once delivery of foreachBatch becomes
+exactly-once state.
 
 Scale: each batch's work is merge_join_view's contract — O(|delta| +
 |view| + |R|), never a rescan of historical facts. The full rewrite of R
 per batch is the self-contained-parquet simplification; a production
 deployment would keep R in a MERGE-capable table format and update only
 touched keys, with this exact dataflow.
-
-The state_dir is bound to one checkpoint lineage (batch ids must grow
-monotonically); starting a NEW checkpoint against an old state_dir is a
-contract violation, as for any batch-id-keyed idempotence scheme.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.incremental import merge_join_view, orders_by_customer
+from ..operators.incremental import merge_join_view
+from .state_swap import apply_batch, foreach_batch_stream, read_batch_state
 
-_VIEW_SCHEMA = T.StructType(
-    [
-        T.StructField("nationkey", T.IntegerType()),
-        T.StructField("n_orders", T.LongType()),
-        T.StructField("sum_scaled", T.LongType()),
-    ]
-)
-_PARTIALS_SCHEMA = T.StructType(
-    [
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("n_orders", T.LongType()),
-        T.StructField("sum_scaled", T.LongType()),
-    ]
-)
-
-
-def _committed_batches(state_dir: str) -> list[int]:
-    """Batch ids whose state write fully finished (both _SUCCESS files)."""
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if not name.startswith("batch="):
-            continue
-        base = os.path.join(state_dir, name)
-        if os.path.exists(
-            os.path.join(base, "view", "_SUCCESS")
-        ) and os.path.exists(os.path.join(base, "partials", "_SUCCESS")):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _load_state(
-    spark: SparkSession, state_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(view, partials) of the highest committed batch; empty frames with
-    the declared schemas on cold start."""
-    committed = _committed_batches(state_dir)
-    if not committed:
-        return (
-            spark.createDataFrame([], _VIEW_SCHEMA),
-            spark.createDataFrame([], _PARTIALS_SCHEMA),
-        )
-    base = os.path.join(state_dir, f"batch={committed[-1]}")
-    return (
-        spark.read.schema(_VIEW_SCHEMA).parquet(os.path.join(base, "view")),
-        spark.read.schema(_PARTIALS_SCHEMA).parquet(
-            os.path.join(base, "partials")
-        ),
-    )
+_STATE = {
+    "view": T.StructType(
+        [
+            T.StructField("nationkey", T.IntegerType()),
+            T.StructField("n_orders", T.LongType()),
+            T.StructField("sum_scaled", T.LongType()),
+        ]
+    ),
+    "partials": T.StructType(
+        [
+            T.StructField("o_custkey", T.LongType()),
+            T.StructField("n_orders", T.LongType()),
+            T.StructField("sum_scaled", T.LongType()),
+        ]
+    ),
+}
 
 
 def apply_orders_batch(
@@ -101,16 +53,19 @@ def apply_orders_batch(
 ) -> None:
     """Fold one order micro-batch into the maintained state — the
     foreachBatch body, exposed for direct replay testing."""
-    if batch_id in set(_committed_batches(state_dir)):
-        return  # replay of an already-applied batch: exactly-once no-op
-    v_old, r_old = _load_state(spark, state_dir)
-    no_new_customers = customer.limit(0)
-    v_new, r_new = merge_join_view(
-        v_old, r_old, batch_df, customer, no_new_customers
-    )
-    base = os.path.join(state_dir, f"batch={batch_id}")
-    v_new.write.mode("overwrite").parquet(os.path.join(base, "view"))
-    r_new.write.mode("overwrite").parquet(os.path.join(base, "partials"))
+
+    def step(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        no_new_customers = customer.limit(0)
+        view, partials = merge_join_view(
+            state["view"],
+            state["partials"],
+            batch_df,
+            customer,
+            no_new_customers,
+        )
+        return {"view": view, "partials": partials}
+
+    apply_batch(spark, state_dir, batch_id, _STATE, step)
 
 
 def maintain_join_view_stream(
@@ -123,21 +78,19 @@ def maintain_join_view_stream(
     """Wire the merge into a writeStream; ``.start()`` to run. The
     stream's only required columns are o_custkey and o_totalprice — the
     exact shape orders_by_customer consumes."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_orders_batch(spark, state_dir, batch_df, batch_id, customer)
-
-    return (
-        orders_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return foreach_batch_stream(
+        orders_stream,
+        lambda batch_df, batch_id: apply_orders_batch(
+            spark, state_dir, batch_df, batch_id, customer
+        ),
+        checkpoint_dir,
     )
 
 
 def read_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained revenue-by-nation view as of the last committed
     batch, with the scaled sum surfaced as a double revenue column."""
-    view, _ = _load_state(spark, state_dir)
+    view = read_batch_state(spark, state_dir, _STATE)["view"]
     return view.select(
         "nationkey",
         "n_orders",

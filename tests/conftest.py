@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
@@ -28,12 +30,17 @@ def spark():
 #   exercised and any query is covered by bumping QUICK_MOD locally)
 #   plus every test in the fast correctness-critical modules. ~6 min.
 # - `pytest -m quick`: same lane, selected explicitly.
+# - `pytest tests/test_x.py` or `pytest tests/test_x.py::test_y`: a test
+#   file named on the command line runs whole, whatever its lane.
 # - `pytest -m full` (or TDK_FULL_TESTS=1): everything — the round
 #   gate before shipping. The full sweep also runs standalone via
 #   scripts/parity_sweep.py.
 # ---------------------------------------------------------------------------
 
 QUICK_MOD = 12
+
+#: which lane this session ran, for the terminal summary
+_LANE = pytest.StashKey[str]()
 
 #: per-query sweep modules sliced 1-in-QUICK_MOD in the quick lane
 _SWEEP_MODULES = {"test_oracle_parity", "test_plan_hazards"}
@@ -85,11 +92,40 @@ def pytest_collection_modifyitems(config, items):
     # No explicit -m and no full-suite opt-in: default to the quick
     # lane so a bare `pytest tests/` finishes inside the verify window
     # instead of being cut off (explicit deselection keeps the report
-    # honest about what was skipped).
-    if config.option.markexpr or os.environ.get("TDK_FULL_TESTS"):
+    # honest about what was skipped).  Files named by path or node id
+    # are kept whole: asking for a slow module by name must run it.
+    if config.option.markexpr:
+        config.stash[_LANE] = f"-m {config.option.markexpr!r}"
         return
-    selected = [i for i in items if i.get_closest_marker("quick")]
-    deselected = [i for i in items if not i.get_closest_marker("quick")]
+    if os.environ.get("TDK_FULL_TESTS"):
+        config.stash[_LANE] = "full (TDK_FULL_TESTS)"
+        return
+    named = _named_files(config)
+
+    def runs(item) -> bool:
+        return bool(item.get_closest_marker("quick")) or item.path in named
+
+    keep = [i for i in items if runs(i)]
+    deselected = [i for i in items if not runs(i)]
+    config.stash[_LANE] = (
+        f"quick ({len(deselected)} slow tests deselected; "
+        "run -m full or TDK_FULL_TESTS=1 for the full suite)"
+    )
     if deselected:
         config.hook.pytest_deselected(items=deselected)
-        items[:] = selected
+        items[:] = keep
+
+
+def _named_files(config) -> set[Path]:
+    """Test files named on the command line, by path or node id."""
+    out = set()
+    for arg in config.args:
+        path = Path(config.invocation_params.dir, arg.split("::", 1)[0])
+        if path.is_file():
+            out.add(path.resolve())
+    return out
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    if _LANE in config.stash:
+        terminalreporter.write_line(f"test lane: {config.stash[_LANE]}")

@@ -1,6 +1,6 @@
-"""Crash-window unit tests for streaming/state_swap.py.
+"""Unit tests for the two state-commit protocols in streaming/state_swap.py.
 
-The swap protocol has three distinct crash points; each must heal on
+The swap-merge protocol has three distinct crash points; each must heal on
 the next recover_state/swap_write pair without losing accumulated state
 or wedging the stream:
 
@@ -11,17 +11,36 @@ or wedging the stream:
      swap_write) clears ._old; rename(live, old) must not ENOTEMPTY.
   3. mid-write of ._tmp                               — overwrite mode
      on the next batch replaces it; nothing to heal.
+
+The batch-dir protocol must keep only the latest commit and its
+predecessor, and must treat any id at or below the latest commit as a
+replay — even when that id's own directory was already pruned.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from tdk_apache_log_etl_spark.streaming.state_swap import (
+    apply_batch,
+    committed_batches,
     prune_batch_dirs,
+    read_batch_state,
     recover_state,
     swap_write,
 )
+
+_COUNTS = {
+    "counts": T.StructType(
+        [
+            T.StructField("k", T.StringType()),
+            T.StructField("n", T.LongType()),
+        ]
+    )
+}
 
 
 def _state_df(spark, vals):
@@ -102,3 +121,54 @@ def test_prune_batch_dirs_keeps_only_requested(tmp_path):
     prune_batch_dirs(sd, keep_ids={3, 7})
     kept = sorted(os.listdir(sd))
     assert kept == ["batch=3", "batch=7", "notabatch"]
+
+
+def _apply_one(spark, state_dir, batch_id):
+    """An additive batch-dir step: every batch adds 1 to key 'a'."""
+
+    def step(state):
+        delta = spark.createDataFrame([("a", 1)], _COUNTS["counts"])
+        return {
+            "counts": state["counts"]
+            .unionByName(delta)
+            .groupBy("k")
+            .agg(F.sum("n").cast("long").alias("n"))
+        }
+
+    apply_batch(spark, state_dir, batch_id, _COUNTS, step)
+
+
+def _total(spark, state_dir):
+    state = read_batch_state(spark, state_dir, _COUNTS)
+    return sum(r.n for r in state["counts"].collect())
+
+
+def _batch_dirs(state_dir):
+    return sorted(d for d in os.listdir(state_dir) if d.startswith("batch="))
+
+
+def test_apply_batch_keeps_only_commit_and_predecessor(spark, tmp_path):
+    sd = str(tmp_path / "state")
+    for bid in range(4):
+        _apply_one(spark, sd, bid)
+    assert _batch_dirs(sd) == ["batch=2", "batch=3"]
+    assert committed_batches(sd, _COUNTS) == [2, 3]
+    # the read resolves to batch 3, the only dir holding all four adds
+    assert _total(spark, sd) == 4
+
+
+def test_apply_batch_skips_replay_of_pruned_id(spark, tmp_path):
+    sd = str(tmp_path / "state")
+    for bid in range(3):
+        _apply_one(spark, sd, bid)
+    assert _batch_dirs(sd) == ["batch=1", "batch=2"]
+    for replayed in (0, 1, 2):  # pruned, predecessor, latest
+        _apply_one(spark, sd, replayed)
+        assert _batch_dirs(sd) == ["batch=1", "batch=2"]
+        assert _total(spark, sd) == 3
+
+
+def test_read_batch_state_cold_start_is_empty_with_schema(spark, tmp_path):
+    state = read_batch_state(spark, str(tmp_path / "none"), _COUNTS)
+    assert state["counts"].schema == _COUNTS["counts"]
+    assert state["counts"].count() == 0

@@ -12,17 +12,20 @@ import pandas as pd
 
 from tdk_apache_log_etl_spark.operators import QUERIES
 from tdk_apache_log_etl_spark.streaming.anomaly_stream import (
-    _committed_batches,
     apply_anomaly_batch,
     maintain_anomaly_stream,
     read_current_anomalies,
 )
+from tdk_apache_log_etl_spark.streaming.state_swap import committed_batches
 
 EVENT_DDL = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
 COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+
+#: the batch-dir parts anomaly_stream commits per batch
+STATE_PARTS = ("hourly",)
 
 
 def _events(hour_specs):
@@ -120,7 +123,7 @@ def test_torn_hourly_write_ignored(spark, tmp_path):
     os.makedirs(torn)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn")
-    assert _committed_batches(state) == [0]
+    assert committed_batches(state, STATE_PARTS) == [0]
     [r] = read_current_anomalies(spark, state).collect()
     assert (r.event_type, r.n_events) == ("view", 10)
     apply_anomaly_batch(

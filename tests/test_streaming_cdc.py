@@ -10,17 +10,20 @@ import os
 import pandas as pd
 
 from tdk_apache_log_etl_spark.streaming.cdc_stream import (
-    _committed_batches,
     apply_cdc_stream_batch,
     maintain_dimension_stream,
     read_current_snapshot,
 )
+from tdk_apache_log_etl_spark.streaming.state_swap import committed_batches
 
 CHANGE_COLS = ["c_custkey", "op", "change_seq", "c_name", "c_mktsegment"]
 CHANGE_DDL = (
     "c_custkey long, op string, change_seq long, "
     "c_name string, c_mktsegment string"
 )
+
+#: the batch-dir parts cdc_stream commits per batch
+STATE_PARTS = ("snapshot",)
 
 
 def _rows(df):
@@ -67,7 +70,7 @@ def test_stream_applies_inserts_updates_deletes(spark, tmp_path):
         (2, "bob2", "FURNITURE"),
     ]
     # two committed batch dirs, monotonically increasing
-    assert len(_committed_batches(state)) >= 1
+    assert len(committed_batches(state, STATE_PARTS)) >= 1
 
 
 def test_in_batch_compaction_orders_by_seq(spark, tmp_path):
@@ -119,7 +122,7 @@ def test_torn_state_write_ignored(spark, tmp_path):
     os.makedirs(torn)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn")
-    assert _committed_batches(state) == [0]
+    assert committed_batches(state, STATE_PARTS) == [0]
     assert _rows(read_current_snapshot(spark, state)) == [
         (1, "alice", "AUTOMOBILE")
     ]

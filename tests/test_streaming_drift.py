@@ -136,3 +136,27 @@ def test_state_retention_keeps_only_commit_and_predecessor(spark, tmp_path):
         .collect()
     )
     assert total == 4
+
+
+def test_replay_of_pruned_batch_id_is_a_no_op(spark, tmp_path):
+    """Batch ids grow per checkpoint, so an id at or below the latest
+    commit is a replay even after retention pruned its dir: it must not
+    recompute, write a new dir, or prune the predecessor readers use."""
+    import os
+
+    _write(tmp_path / "live.parquet", _rows([("click", 1.0)], 0))
+    df = spark.read.parquet(str(tmp_path / "live.parquet"))
+    state = str(tmp_path / "state")
+    for i in range(3):
+        apply_drift_batch(df, state, i)
+
+    def dirs():
+        return sorted(d for d in os.listdir(state) if d.startswith("batch="))
+
+    assert dirs() == ["batch=1", "batch=2"]
+    before = sorted(tuple(r) for r in read_live_counts(spark, state).collect())
+    apply_drift_batch(df, state, 0)  # replay of the pruned id 0
+    assert dirs() == ["batch=1", "batch=2"]
+    assert sorted(
+        tuple(r) for r in read_live_counts(spark, state).collect()
+    ) == before

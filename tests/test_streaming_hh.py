@@ -13,13 +13,16 @@ from collections import Counter
 import pandas as pd
 
 from tdk_apache_log_etl_spark.streaming.heavy_hitters_stream import (
-    _committed_batches,
     apply_hh_batch,
     maintain_heavy_hitters_stream,
     read_current_heavy_hitters,
 )
+from tdk_apache_log_etl_spark.streaming.state_swap import committed_batches
 
 DOC_DDL = "doc_id long, text string, lang string, source string, n_chars long"
+
+#: the batch-dir parts heavy_hitters_stream commits per batch
+STATE_PARTS = ("summary", "meta")
 
 
 def _docs(texts, start_id=0):
@@ -80,7 +83,7 @@ def test_streamed_mg_invariants_end_to_end(spark, tmp_path):
         spark, stream, state, str(tmp_path / "ckpt"), k=4
     ).start()
     assert q.awaitTermination(120)
-    assert len(_committed_batches(state)) == 2
+    assert len(committed_batches(state, STATE_PARTS)) == 2
     rows = read_current_heavy_hitters(spark, state, k=4).collect()
     exact = _exact_trigram_counts(BATCH1 + BATCH2)
     _check_invariants(rows, exact, k=4)
@@ -112,7 +115,7 @@ def test_torn_state_write_ignored(spark, tmp_path):
     os.makedirs(torn)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn")
-    assert _committed_batches(state) == [0]
+    assert committed_batches(state, STATE_PARTS) == [0]
     # a later good batch still lands and the combined invariants hold
     apply_hh_batch(
         spark, state, spark.createDataFrame(_docs(BATCH2), DOC_DDL), 1, k=4

@@ -11,17 +11,20 @@ import pandas as pd
 
 from tdk_apache_log_etl_spark.operators import QUERIES
 from tdk_apache_log_etl_spark.streaming.slo_stream import (
-    _committed_batches,
     apply_slo_batch,
     maintain_slo_stream,
     read_current_alerts,
 )
+from tdk_apache_log_etl_spark.streaming.state_swap import committed_batches
 
 EVENT_DDL = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
 COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+
+#: the batch-dir parts slo_stream commits per batch
+STATE_PARTS = ("hourly",)
 
 
 def _events(hour_specs):
@@ -103,7 +106,7 @@ def test_torn_hourly_write_ignored(spark, tmp_path):
     os.makedirs(torn)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn")
-    assert _committed_batches(state) == [0]
+    assert committed_batches(state, STATE_PARTS) == [0]
     [r] = read_current_alerts(spark, state).collect()
     assert (r.n_events, r.n_errors) == (10, 2)
     # a later good batch still lands with the next id

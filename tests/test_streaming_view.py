@@ -12,13 +12,16 @@ import pyspark.sql.functions as F
 from tdk_apache_log_etl_spark.operators.incremental import revenue_by_nation
 from tdk_apache_log_etl_spark.sources.tables import load_table
 from tdk_apache_log_etl_spark.streaming.view_maintenance import (
-    _committed_batches,
     apply_orders_batch,
     maintain_join_view_stream,
     read_current_view,
 )
+from tdk_apache_log_etl_spark.streaming.state_swap import committed_batches
 
 from .conftest import SF_DIR_SMOKE
+
+#: the batch-dir parts view_maintenance commits per batch
+STATE_PARTS = ("view", "partials")
 
 
 def _rows(df):
@@ -70,13 +73,13 @@ def test_streamed_view_equals_direct_recompute(spark, tmp_path):
     q.awaitTermination(120)
 
     # every delta landed as its own committed batch
-    assert len(_committed_batches(state)) >= 2
+    assert len(committed_batches(state, STATE_PARTS)) >= 2
     assert _rows(read_current_view(spark, state)) == _rows(
         _expected_view(spark)
     )
 
     # restart with no new files: no new state, view unchanged
-    before = _committed_batches(state)
+    before = committed_batches(state, STATE_PARTS)
     q2 = maintain_join_view_stream(
         spark,
         spark.readStream.schema(schema)
@@ -88,7 +91,7 @@ def test_streamed_view_equals_direct_recompute(spark, tmp_path):
         ckpt,
     ).start()
     q2.awaitTermination(60)
-    assert _committed_batches(state) == before
+    assert committed_batches(state, STATE_PARTS) == before
     assert _rows(read_current_view(spark, state)) == _rows(
         _expected_view(spark)
     )
@@ -130,11 +133,11 @@ def test_incomplete_batch_directory_is_ignored(spark, tmp_path):
     torn.mkdir(parents=True)
     (torn / "_SUCCESS").touch()
 
-    assert _committed_batches(state) == [0]
+    assert committed_batches(state, STATE_PARTS) == [0]
     good = _rows(read_current_view(spark, state))
     assert good == _rows(_expected_view(spark))
 
     # re-applying batch 1 (the replay after the crash) repairs the tear
     apply_orders_batch(spark, state, orders.limit(0), 1, customer)
-    assert _committed_batches(state) == [0, 1]
+    assert committed_batches(state, STATE_PARTS) == [0, 1]
     assert _rows(read_current_view(spark, state)) == good

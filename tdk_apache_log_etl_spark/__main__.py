@@ -108,14 +108,14 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "ingest":
             from .pipeline import ingest
 
-            corrupt = ingest(
+            _, metrics = ingest(
                 spark,
                 args.log_dir,
                 args.staging_path,
                 archive_dir=args.archive_dir,
                 run_date=args.run_date,
             )
-            print(f"corrupt_lines={corrupt.count()}")
+            print(f"corrupt_lines={metrics['n_corrupt']}")
         elif args.cmd == "analytics":
             from .pipeline import daily_analytics
             from .sinks.jdbc import write_jdbc

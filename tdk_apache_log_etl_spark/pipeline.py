@@ -5,7 +5,11 @@ drop-in equivalents, Spark-native:
 
   * ``ingest``  ≙ the Lambda (sree-etl-tdk-lambda.py:145-218): discover
     ``*.log`` files → parse CLF → write date-partitioned Snappy-Parquet
-    staging (K1/K2 collapsed into ONE write) → archive processed files.
+    staging (K1/K2 collapsed into ONE write) → quarantine malformed
+    lines → archive processed files. A clean day is ONE scan of the
+    text (the staging write, with its data-quality counts observed on
+    that same pass); a day with malformed lines is TWO (the quarantine
+    write re-reads and re-parses the day's text).
   * ``daily_analytics`` ≙ the Glue job (sree-etl-tdk-glue-job.py:13-100):
     partition-pruned read of one day → the three metrics in one scan →
     per-user counts + a one-row summary, handed to any sink (JDBC via
@@ -31,10 +35,17 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks.staging import read_staging, write_quarantine, write_staging
+from .sinks.staging import (
+    QUARANTINE_SCHEMA,
+    archive_processed,
+    quarantine_date,
+    read_staging,
+    write_quarantine,
+    write_staging,
+)
 from .sources.apache_log import read_apache_log
 
 
@@ -44,35 +55,58 @@ def ingest(
     staging_path: str,
     archive_dir: str | None = None,
     run_date: str | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, dict[str, int]]:
     """Batch ingest: ``*.log`` under ``log_dir`` → partitioned staging.
 
-    Returns the corrupt-line audit frame (empty when every line parsed),
-    read back from a quarantine parquet written during ingest — it stays
-    valid after the source files are archived away (a frame lazily bound
-    to the moved files would fail on first use). Archiving moves processed
-    files driver-side — the batch equivalent of the streaming source's
-    ``cleanSource=archive`` (K5); at S3 scale this is a manifest-driven
-    batch copy, never per-row work.
+    Returns ``(corrupt, metrics)``. ``metrics`` comes from ``df.observe``
+    on the staging write itself: ``n_rows``, ``n_unparsed``,
+    ``n_null_user``, ``n_null_size`` and ``n_corrupt``, with no
+    validation scan of its own (the reference's blind ``df.count()``,
+    sree-etl-tdk-lambda.py:191, is exactly such a pass). ``corrupt`` is
+    the run date's quarantined lines, read back from the quarantine
+    parquet so it stays valid after the source files are archived away.
+
+    The quarantine pass runs only when the write saw a corrupt line. On
+    a clean day the run date's quarantine partition is removed instead:
+    a dynamic overwrite with an empty frame replaces no partition, so a
+    clean re-run of a dirty day would otherwise keep the stale rows.
+
+    Archiving moves processed files driver-side — the batch equivalent
+    of the streaming source's ``cleanSource=archive`` (K5).
     """
     parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    write_staging(parsed.drop("_corrupt"), staging_path)
-    quarantine = write_quarantine(parsed, staging_path, run_date)
-    # Explicit schema: on a fully-clean day the quarantine write leaves
-    # an EMPTY partitioned directory (no files to infer from), and a
-    # schema-inferring read would fail the whole ingest — the worst
-    # possible reward for a corruption-free input.
-    corrupt = spark.read.schema("_corrupt STRING, date STRING").parquet(
-        quarantine
+    obs = Observation("ingest")
+    observed = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(F.col("request_method").isNull(), 1)).alias(
+            "n_unparsed"
+        ),
+        F.count(F.when(F.col("user_id").isNull(), 1)).alias("n_null_user"),
+        F.count(F.when(F.col("size").isNull(), 1)).alias("n_null_size"),
+        F.count(F.col("_corrupt")).alias("n_corrupt"),
     )
+    # The observe node sits below the drop, so the _corrupt tally rides
+    # the staging write while the written columns honor STAGING_SCHEMA.
+    write_staging(observed.drop("_corrupt"), staging_path)
+    metrics = dict(obs.get)
+    quarantine = os.path.join(staging_path, "_quarantine")
+    day = os.path.join(quarantine, f"date={quarantine_date(run_date)}")
+    if metrics["n_corrupt"]:
+        write_quarantine(parsed, staging_path, run_date)
+        # The partition dir under basePath keeps the date column without
+        # Spark's "All paths were ignored" warning for a root named "_…".
+        corrupt = (
+            spark.read.schema(QUARANTINE_SCHEMA)
+            .option("basePath", quarantine)
+            .parquet(day)
+        )
+    else:
+        shutil.rmtree(day, ignore_errors=True)
+        corrupt = spark.createDataFrame([], QUARANTINE_SCHEMA)
     if archive_dir is not None:
-        os.makedirs(archive_dir, exist_ok=True)
-        for name in sorted(os.listdir(log_dir)):
-            if name.endswith(".log"):
-                shutil.move(
-                    os.path.join(log_dir, name), os.path.join(archive_dir, name)
-                )
-    return corrupt
+        archive_processed(log_dir, archive_dir)
+    return corrupt, metrics
 
 
 def daily_analytics(

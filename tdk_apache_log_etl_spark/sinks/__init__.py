@@ -1,7 +1,6 @@
 from .staging import (  # noqa: F401
     STAGING_TABLE,
     archive_processed,
-    ingest_logs,
     read_staging,
     write_staging,
 )

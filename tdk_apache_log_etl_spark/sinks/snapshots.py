@@ -36,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming import state_swap
+
 _MANIFEST_DIR = "manifests"
 _DATA_DIR = "data"
 
@@ -202,11 +204,7 @@ def maintain_snapshot_stream(stream_df: DataFrame, table_dir: str,
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         snapshot_write_batch(batch_df, table_dir, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return state_swap.foreach_batch_stream(stream_df, _apply, checkpoint_dir)
 
 
 def snapshot_diff(

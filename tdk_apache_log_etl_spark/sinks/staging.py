@@ -1,8 +1,9 @@
 """Staging table: date-partitioned Snappy Parquet — the reference's K1/K2
 collapsed into ONE write (the reference writes the same frame twice:
 catalog-partitioned at sree-etl-tdk-lambda.py:112-118 and plain parquet at
-:121-122), plus the partition-pruned reader (S4/F3) and the post-ingest
-archive move (K5).
+:121-122), plus the quarantine sidecar for malformed lines, the
+partition-pruned reader (S4/F3) and the post-ingest archive move (K5).
+``pipeline.ingest`` composes them into the batch ingest flow.
 
 Scale notes:
   * partitionBy("date") gives the identical hive-style layout the reference
@@ -23,8 +24,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.apache_log import read_apache_log
-
 STAGING_TABLE = "log_clean"
 
 #: The cleansed staging schema (SURVEY.md §1.3; matches what
@@ -36,6 +35,11 @@ STAGING_SCHEMA = (
     "user_agent string, request_method string, request_resource string, "
     "request_protocol string, date string"
 )
+
+
+#: The quarantine sidecar's schema: the raw malformed line and the run
+#: date that stamps its partition.
+QUARANTINE_SCHEMA = "_corrupt STRING, date STRING"
 
 
 #: Columnar formats the staging table may be stored in. Parquet is the
@@ -77,27 +81,27 @@ def write_staging(
     )
 
 
+def quarantine_date(run_date: str | None) -> str:
+    """The quarantine partition a run's corrupt lines land in: corrupt
+    lines have no parseable event date, so the run date stamps them."""
+    return run_date if run_date is not None else "unknown"
+
+
 def write_quarantine(
     parsed: DataFrame, staging_path: str, run_date: str | None
 ) -> str:
     """Quarantine the ``_corrupt`` audit rows next to (not inside) the
-    declared staging columns. Every staging writer must drop ``_corrupt``
+    declared staging columns. ``pipeline.ingest`` drops ``_corrupt``
     before ``write_staging`` — otherwise the parquet grows an undeclared
     13th column that the declared-schema read silently hides and that
     ``compact_staging`` (which rewrites through STAGING_SCHEMA) would
     permanently discard. The quarantine is date-partitioned with dynamic
-    overwrite so re-running a day replaces that day's corrupt rows; corrupt
-    lines have no parseable event date, so the run date stamps them.
+    overwrite so re-running a day replaces that day's corrupt rows.
     Returns the quarantine path."""
     quarantine = os.path.join(staging_path, "_quarantine")
     (
         parsed.filter(F.col("_corrupt").isNotNull())
-        .select(
-            "_corrupt",
-            F.lit(run_date if run_date is not None else "unknown").alias(
-                "date"
-            ),
-        )
+        .select("_corrupt", F.lit(quarantine_date(run_date)).alias("date"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("date")
@@ -128,65 +132,6 @@ def read_staging(
     if date is not None:
         df = df.where(F.col("date") == date)
     return df
-
-
-def ingest_logs(
-    spark: SparkSession,
-    log_dir: str,
-    staging_path: str,
-    run_date: str | None = None,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """The reference's whole Lambda (sree-etl-tdk-lambda.py:145-218) as one
-    distributed plan: text scan → native CLF parse → partitioned write.
-    ``_corrupt`` audit rows go to the quarantine sidecar, never into the
-    declared staging columns. Returns the parsed frame (lazy, still
-    carrying ``_corrupt``) for further use."""
-    parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    write_staging(parsed.drop("_corrupt"), staging_path, mode=mode)
-    write_quarantine(parsed, staging_path, run_date)
-    return parsed
-
-
-def ingest_logs_observed(
-    spark: SparkSession,
-    log_dir: str,
-    staging_path: str,
-    run_date: str | None = None,
-    mode: str = "overwrite",
-) -> dict[str, int]:
-    """Ingest with free data-quality telemetry: ``df.observe`` attaches
-    accumulator-backed aggregates to the WRITE pass itself, so row count,
-    corrupt-line count, and null-field tallies come out of the one scan
-    the job already does — no second validation scan of a 100 TB input
-    (the reference's equivalent is a blind ``print`` of ``df.count()``
-    that triggers exactly such an extra pass,
-    sree-etl-tdk-lambda.py:191). Returns the observed metrics dict; the
-    staging parquet is written as a side effect of the same action."""
-    from pyspark.sql import Observation
-
-    parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    obs = Observation("ingest")
-    observed = parsed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("request_method").isNull(), 1)).alias(
-            "n_unparsed"
-        ),
-        F.count(F.when(F.col("user_id").isNull(), 1)).alias("n_null_user"),
-        F.count(F.when(F.col("size").isNull(), 1)).alias("n_null_size"),
-        F.count(F.when(F.col("_corrupt").isNotNull(), 1)).alias("n_corrupt"),
-    )
-    # The observe node sits below the drop, so metrics (including the
-    # _corrupt tally) still ride the staging write's single scan while the
-    # written columns honor STAGING_SCHEMA.
-    write_staging(observed.drop("_corrupt"), staging_path, mode=mode)
-    metrics = dict(obs.get)
-    # Quarantine pass only when the first scan saw corruption — clean days
-    # (the common case at 100 TB) stay one-scan.
-    if metrics.get("n_corrupt", 0):
-        write_quarantine(parsed, staging_path, run_date)
-    return metrics
 
 
 def register_staging_table(

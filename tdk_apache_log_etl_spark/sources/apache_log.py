@@ -99,7 +99,6 @@ def parse_clf_lines(
     lines: DataFrame,
     value_col: str = "value",
     run_date: str | None = None,
-    keep_corrupt: bool = True,
 ) -> DataFrame:
     """Parse a DataFrame of raw CLF lines into the cleansed staging schema.
 
@@ -128,7 +127,7 @@ def parse_clf_lines(
         else F.date_format(time_col, "yyyy-MM-dd")
     )
 
-    out = staged.select(
+    return staged.select(
         _fld(parts, 1).alias("ip_address"),
         # Declared double in the catalog schema (sree-etl-tdk-lambda.py:64)
         # even though %l is effectively always "-" → NULL.
@@ -145,16 +144,12 @@ def parse_clf_lines(
         date_col.alias("date"),
         F.when(F.size(parts0) != 9, line).alias("_corrupt"),
     )
-    if not keep_corrupt:
-        out = out.drop("_corrupt")
-    return out
 
 
 def read_apache_log(
     spark: SparkSession,
     path: str,
     run_date: str | None = None,
-    keep_corrupt: bool = True,
 ) -> DataFrame:
     """Read ``*.log`` files under ``path`` into the cleansed staging schema.
 
@@ -163,4 +158,4 @@ def read_apache_log(
     (sree-etl-tdk-lambda.py:147-164) — distributed, one row per line.
     """
     lines = spark.read.option("pathGlobFilter", "*.log").text(path)
-    return parse_clf_lines(lines, run_date=run_date, keep_corrupt=keep_corrupt)
+    return parse_clf_lines(lines, run_date=run_date)

@@ -58,6 +58,8 @@ def test_positive_offset_and_null_fields(spark):
     assert r.referer is None  # quoted "-" → '-' after strip → NULL
     assert r.request_method == "POST"
     assert r.status_code == 401
+    assert (r.ip_address, r.rfc_1413_identity, r.size, r.user_agent,
+            r._corrupt) == ("198.51.100.9", None, 211, "curl/8.4.0", None)
 
 
 def test_negative_offset_and_null_size(spark):
@@ -67,6 +69,11 @@ def test_negative_offset_and_null_size(spark):
     assert r.size is None  # '-' body on a 304
     assert r.status_code == 304
     assert r.date == "2026-08-14"  # stamped from UTC event time
+    assert (r.ip_address, r.rfc_1413_identity, r.user_id, r.referer,
+            r.user_agent, r._corrupt) == (
+        "192.0.2.44", None, 4521, "https://example.com/index.html",
+        "Mozilla/5.0 (Windows NT 10.0; Win64; x64)", None,
+    )
 
 
 def test_malformed_line_preserved_not_fatal(spark):
@@ -74,6 +81,8 @@ def test_malformed_line_preserved_not_fatal(spark):
     # the reference aborts the whole file (sree-etl-tdk-lambda.py:214-218);
     # we keep the row, all-NULL, with the raw line auditable
     assert r.ip_address is None and r.time is None and r.status_code is None
+    assert (r.rfc_1413_identity, r.user_id, r.size, r.referer,
+            r.user_agent) == (None, None, None, None, None)
     assert r._corrupt == "not a log line at all"
 
 

@@ -27,7 +27,7 @@ def test_ingest_then_analytics(spark, tmp_path):
     staging = str(tmp_path / "staging")
     archive = str(tmp_path / "archive")
 
-    corrupt = ingest(
+    corrupt, _ = ingest(
         spark, str(logs), staging, archive_dir=archive, run_date="2026-08-13"
     )
     assert corrupt.count() == 1  # the malformed line, quarantined not fatal
@@ -76,7 +76,9 @@ def test_multi_day_lifecycle_keeps_prior_partitions(spark, tmp_path):
     for f in logs.iterdir():
         f.unlink()
     (logs / "2026-08-14.log").write_text("\n".join(day2_lines) + "\n")
-    ingest(spark, str(logs), staging, run_date="2026-08-14")
+    corrupt2, _ = ingest(spark, str(logs), staging, run_date="2026-08-14")
+    # a clean day's corrupt frame is its own (empty), not day 1's row
+    assert corrupt2.count() == 0
 
     # both days present after the second run
     assert read_staging(spark, staging, date="2026-08-13").count() == len(LINES)
@@ -99,11 +101,40 @@ def test_quarantine_is_idempotent_per_day(spark, tmp_path):
     logs.mkdir()
     staging = str(tmp_path / "staging_q")
     (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
-    c1 = ingest(spark, str(logs), staging, run_date="2026-08-13")
+    c1, _ = ingest(spark, str(logs), staging, run_date="2026-08-13")
     assert c1.count() == 1
     # re-run the same day: corrupt rows replaced, not duplicated
-    c2 = ingest(spark, str(logs), staging, run_date="2026-08-13")
+    c2, _ = ingest(spark, str(logs), staging, run_date="2026-08-13")
     assert c2.count() == 1
+    # re-run it from a fixed, clean file: the stale partition goes too
+    (logs / "2026-08-13.log").write_text("\n".join(LINES[:-1]) + "\n")
+    c3, _ = ingest(spark, str(logs), staging, run_date="2026-08-13")
+    assert c3.count() == 0
+    assert not os.path.exists(
+        os.path.join(staging, "_quarantine", "date=2026-08-13")
+    )
+
+
+def test_ingest_job_count_clean_one_dirty_two(spark, tmp_path):
+    # The staging write is the only scan of a clean day; a day with a
+    # malformed line adds exactly the quarantine write.
+    sc = spark.sparkContext
+    logs = tmp_path / "logs_jobs"
+    logs.mkdir()
+    staging = str(tmp_path / "staging_jobs")
+
+    def jobs(group, lines, run_date):
+        (logs / "day.log").write_text("\n".join(lines) + "\n")
+        sc.setJobGroup(group, group)
+        try:
+            ingest(spark, str(logs), staging, run_date=run_date)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("ingest-clean", LINES[:-1], "2026-08-13") == 1
+    assert jobs("ingest-dirty", LINES, "2026-08-14") == 2
 
 
 def test_ingest_observed_metrics_single_pass(spark, tmp_path):
@@ -114,11 +145,7 @@ def test_ingest_observed_metrics_single_pass(spark, tmp_path):
     (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
     staging = str(tmp_path / "obs_staging")
 
-    from tdk_apache_log_etl_spark.sinks.staging import ingest_logs_observed
-
-    metrics = ingest_logs_observed(
-        spark, str(logs), staging, run_date="2026-08-13"
-    )
+    _, metrics = ingest(spark, str(logs), staging, run_date="2026-08-13")
     assert metrics["n_rows"] == len(LINES)
     assert metrics["n_unparsed"] == 1   # the malformed line
     assert metrics["n_null_user"] == 2  # '-' user + malformed line
@@ -128,36 +155,25 @@ def test_ingest_observed_metrics_single_pass(spark, tmp_path):
     assert staged.count() == metrics["n_rows"]
 
 
-def test_all_staging_writers_honor_declared_schema(spark, tmp_path):
-    # Every staging writer must drop _corrupt before writing: an inferred
+def test_ingest_staging_honors_declared_schema(spark, tmp_path):
+    # The staging writer must drop _corrupt before writing: an inferred
     # read of the staging parquet (what a foreign engine would do) must
     # show exactly the declared 12 columns, and the corrupt audit row must
-    # land in the quarantine sidecar instead — for BOTH convenience
-    # writers, not just pipeline.ingest (round-2 ADVICE).
-    from tdk_apache_log_etl_spark.sinks.staging import (
-        STAGING_SCHEMA,
-        ingest_logs,
-        ingest_logs_observed,
-    )
+    # land in the quarantine sidecar instead (round-2 ADVICE).
+    from tdk_apache_log_etl_spark.sinks.staging import STAGING_SCHEMA
 
     declared = {c.split()[0] for c in STAGING_SCHEMA.split(", ")}
-    for name, runner in [
-        ("w1", lambda lg, st: ingest_logs(spark, lg, st,
-                                          run_date="2026-08-13")),
-        ("w2", lambda lg, st: ingest_logs_observed(spark, lg, st,
-                                                   run_date="2026-08-13")),
-    ]:
-        logs = tmp_path / f"{name}_logs"
-        logs.mkdir()
-        (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
-        staging = str(tmp_path / f"{name}_staging")
-        runner(str(logs), staging)
-        inferred = spark.read.parquet(staging)
-        assert set(inferred.columns) == declared, name
-        quarantined = spark.read.schema("_corrupt STRING, date STRING").parquet(
-            os.path.join(staging, "_quarantine")
-        )
-        assert quarantined.count() == 1, name
+    logs = tmp_path / "schema_logs"
+    logs.mkdir()
+    (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
+    staging = str(tmp_path / "schema_staging")
+    ingest(spark, str(logs), staging, run_date="2026-08-13")
+    inferred = spark.read.parquet(staging)
+    assert set(inferred.columns) == declared
+    quarantined = spark.read.schema("_corrupt STRING, date STRING").parquet(
+        os.path.join(staging, "_quarantine")
+    )
+    assert quarantined.count() == 1
 
 
 def test_cli_analytics_requires_out_or_jdbc(tmp_path):

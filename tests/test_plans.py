@@ -426,8 +426,12 @@ def test_salting_splits_hot_key_partitions(spark):
     from tdk_apache_log_etl_spark.operators.skew import salted_join
 
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # the session sizes shuffles to the core count (8 on a small host);
+    # the 8x bound below assumes 32 reducers for the 64 salted groups
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
         # 90% of the big side carries ONE key — the stranded-reducer shape
         big = spark.range(100_000).select(
@@ -462,6 +466,7 @@ def test_salting_splits_hot_key_partitions(spark):
         assert m_salted <= m_plain / 8, (m_plain, m_salted)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 

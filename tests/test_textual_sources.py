@@ -80,111 +80,3 @@ def test_orc_roundtrip_with_partition_pruning(spark, tmp_path):
     assert back.count() == 50
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-
-
-# ---------------------------------------------------------------------------
-# Python DataSource API connector (sources/pyds_logsource.py)
-# ---------------------------------------------------------------------------
-
-CLF_GOLDEN = [
-    '203.0.113.7 - 4521 [13/Aug/2026:23:41:02 +0000] "GET /index.html '
-    'HTTP/1.1" 200 5120 "https://example.com/" '
-    '"Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36"',
-    '198.51.100.9 - - [13/Aug/2026:23:41:03 +0530] "POST /api/v1/login '
-    'HTTP/1.1" 401 211 "-" "curl/8.4.0"',
-    '192.0.2.44 - 4521 [13/Aug/2026:23:41:05 -0800] "GET /img/logo.png '
-    'HTTP/1.0" 304 - "https://example.com/index.html" '
-    '"Mozilla/5.0 (Windows NT 10.0; Win64; x64)"',
-    "not a log line at all",
-]
-
-
-def test_pyds_apachelog_matches_native_parser(spark, tmp_path):
-    """The Python DataSource connector and the native JVM-regex parser
-    must agree field-for-field on golden lines (incl. timezone offsets
-    and the corrupt-line rule) — the interchangeability contract."""
-    from tdk_apache_log_etl_spark.sources import pyds_logsource
-    from tdk_apache_log_etl_spark.sources.apache_log import read_apache_log
-
-    d = tmp_path / "logs"
-    d.mkdir()
-    (d / "2026-08-13.log").write_text("\n".join(CLF_GOLDEN[:2]) + "\n")
-    (d / "2026-08-14.log").write_text("\n".join(CLF_GOLDEN[2:]) + "\n")
-    (d / "ignored.txt").write_text("nope\n")
-
-    pyds_logsource.register(spark)
-    got = (
-        spark.read.format("apachelog")
-        .option("path", str(d))
-        .load()
-    )
-    # one partition per file
-    assert got.rdd.getNumPartitions() == 2
-    cols = [
-        "ip_address", "rfc_1413_identity", "user_id", "time",
-        "status_code", "size", "referer", "user_agent", "_corrupt",
-    ]
-    native = read_apache_log(spark, str(d))
-    a = sorted(
-        [tuple(r[c] for c in cols) for r in got.collect()], key=repr
-    )
-    b = sorted(
-        [tuple(r[c] for c in cols) for r in native.collect()], key=repr
-    )
-    assert a == b
-
-
-def test_pyds_parse_clf_line_pure():
-    from tdk_apache_log_etl_spark.sources.pyds_logsource import (
-        parse_clf_line,
-    )
-
-    row = parse_clf_line(CLF_GOLDEN[1])
-    assert row[0] == "198.51.100.9"
-    assert row[2] is None                      # '-' user → NULL
-    assert row[3].isoformat() == "2026-08-13T18:11:03"   # +0530 removed
-    assert row[5] == 401 and row[9] is None
-    bad = parse_clf_line("garbage")
-    assert bad[9] == "garbage" and bad[0] is None
-
-
-def test_pyds_apachelog_stream_resumes_at_file_boundary(spark, tmp_path):
-    """Streaming connector: first run ingests the initial files; a
-    restart from the same checkpoint picks up ONLY files added since —
-    the offset (= seen-file list) round-trips through the checkpoint."""
-    from tdk_apache_log_etl_spark.sources import pyds_logsource
-
-    pyds_logsource.register(spark)
-    d = tmp_path / "logs"
-    d.mkdir()
-    (d / "a.log").write_text("\n".join(CLF_GOLDEN[:2]) + "\n")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        stream = (
-            spark.readStream.format("apachelog")
-            .option("path", str(d))
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.read.parquet(out).select("ip_address").collect()
-
-    first = sorted(r.ip_address for r in run_once())
-    assert first == ["198.51.100.9", "203.0.113.7"]
-
-    (d / "b.log").write_text("\n".join(CLF_GOLDEN[2:]) + "\n")
-    second = [r.ip_address for r in run_once()]
-    # run 2 appended ONLY the new file's rows (one parsed line + one
-    # corrupt line) — a.log was not re-ingested
-    assert len(second) == 4
-    assert sorted(x for x in second if x is not None) == [
-        "192.0.2.44", "198.51.100.9", "203.0.113.7",
-    ]
